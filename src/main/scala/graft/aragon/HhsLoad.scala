@@ -3,7 +3,7 @@ package graft.aragon
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.{Cleaning, Dedup, Validate}
+import graft.ops.{Cleaning, Validate}
 import AragonSchema._
 
 /** The HHS weekly-capacity load pipeline (reference load_hhs.py,
@@ -17,7 +17,9 @@ import AragonSchema._
   * projections → anti-join dedup vs existing-key snapshots → validate-
   * split → three inserts + quarantine. Narrow except the dedup joins
   * (broadcast of key snapshots) and the intra-file firstPerKey (one
-  * shuffle on the key).
+  * shuffle on the key). Only the consumed columns ride past the scan:
+  * the shuffles, joins and tagged cache carry the 17 payload columns
+  * plus row pins, while the full-width cached scan serves quarantine.
   *
   * Semantic deltas vs the reference, knowingly accepted (SURVEY §7.3):
   * per-row insert-order dedup is reproduced deterministically by
@@ -28,6 +30,11 @@ object HhsLoad {
 
   private val RowId = "__row_id"
   private val SrcFile = "__src_file"
+
+  /** Every raw column the load reads: keys, payload and row pins. */
+  private val consumedCols: Seq[String] =
+    Seq("hospital_pk", "hospital_name", "collection_week") ++ locationCols ++
+      bedMetrics ++ Seq(SrcFile, RowId)
 
   /** Per-file load accounting (reference load_hhs.py:157-161). */
   final case class Metrics(
@@ -91,11 +98,12 @@ object HhsLoad {
 
     import org.apache.spark.sql.expressions.Window
 
-    // raw is cached: the quarantine branch re-reads it, and the row ids
-    // from monotonically_increasing_id must be the SAME ids the tagged
-    // frame saw — a second scan is not guaranteed to reproduce them
+    // raw is cached at full width: the quarantine branch re-reads it for
+    // the original text of every column, and the row ids from
+    // monotonically_increasing_id must be the SAME ids the tagged frame
+    // saw — a second scan is not guaranteed to reproduce them
     val raw = readRaw(spark, csvPath).cache()
-    val typed = clean(raw)
+    val typed = clean(raw.select(consumedCols.map(col): _*))
 
     // --- ONE tagged frame instead of three branch pipelines ------------
     // Hospitals and Locations share the hospital_pk key → one window
@@ -103,7 +111,10 @@ object HhsLoad {
     // existing-key probes are broadcast left joins with marker flags.
     // Net cost: 2 window shuffles + broadcasts over ONE pass of the
     // scan — the branch-per-table form re-shuffled and cached the wide
-    // frame three times.
+    // frame three times. The frame carries only the consumed columns:
+    // the cache below is a plan barrier, so without the projection above
+    // every filler column of the file would ride both shuffles and the
+    // cache.
     val wPk = Window.partitionBy(col("hospital_pk"))
       .orderBy(col(SrcFile).asc, col(RowId).asc)
     val wBed = Window.partitionBy(col("hospital_pk"), col("collection_week"))

@@ -3,7 +3,7 @@ package graft.aragon
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.{Cleaning, Dedup, Validate}
+import graft.ops.{Cleaning, Validate}
 import AragonSchema._
 
 /** The CMS quality snapshot load (reference load_quality.py, SURVEY.md
@@ -11,11 +11,13 @@ import AragonSchema._
   *
   * Reference shape: column-pruned pandas scan → vectorized clean → ONE
   * batched IN-list dup probe → 500-row executemany with row-at-a-time
-  * fallback. Spark shape: single scan (Catalyst prunes the 38-col CSV
-  * to what the plan touches) → clean → anti-join vs the (facility_id @
-  * data_date) snapshot → validate-split (pre-validating what the DB
-  * CHECK would reject, so the sink write is clean — the idiomatic
-  * replacement for the batch-then-row fallback, SURVEY §3 E2).
+  * fallback. Spark shape: single scan → clean of the 5 consumed columns
+  * → ONE cached tagged frame: a broadcast left join vs the (facility_id
+  * @ data_date) snapshot flags duplicates, and a `__valid` flag
+  * pre-validates what the DB CHECK would reject, so the sink write is
+  * clean (the idiomatic replacement for the batch-then-row fallback,
+  * SURVEY §3 E2). One aggregation over that frame yields the metrics;
+  * the output and the quarantine ids are filters of it.
   *
   * Note the reference does NOT dedupe in-file facility_id duplicates
   * (no unique constraint on the serial-pk table) — we reproduce that:
@@ -75,32 +77,39 @@ object QualityLoad {
     val raw = readRaw(spark, csvPath).cache()
     val typed = clean(raw, date)
 
-    // D3: one batched probe ≡ anti-join on facility_id at this date
+    // D3: one batched probe ≡ a broadcast left join on facility_id at
+    // this date; a null facility_id never matches, so it stays fresh
     val existingAtDate = existingKeys.toDF("facility_id", "data_date")
       .filter(col("data_date") === lit(date)).select("facility_id")
-    val fresh = Dedup.antiDedup(typed, Seq("facility_id"), existingAtDate)
+      .dropDuplicates().withColumn("__exists", lit(true))
 
     // P10: CHECK (hospital_overall_rating >= 0) pre-validated, plus the
     // BOOLEAN-column constraint on emergency_services: anything outside
     // {Yes, No, null} fails the reference's insert → quarantine
-    val (valid, invalid) = Validate.validateSplit(fresh,
-      Seq(col("hospital_overall_rating").isNull || col("hospital_overall_rating") >= 0,
-          col(EsRaw).isNull || col(EsRaw).isin("Yes", "No")))
-    val validC = valid.cache()
-    val invalidC = invalid.cache()
+    val tagged = typed
+      .join(broadcast(existingAtDate), Seq("facility_id"), "left")
+      .withColumn("__fresh", col("__exists").isNull)
+      .withColumn("__valid", Validate.validPredicate(Seq(
+        col("hospital_overall_rating").isNull || col("hospital_overall_rating") >= 0,
+        col(EsRaw).isNull || col(EsRaw).isin("Yes", "No"))))
+      .withColumn("__keep", col("__fresh") && col("__valid"))
+      .cache()
 
-    val droppedIds = typed.select(RowId)
-      .join(validC.select(RowId), Seq(RowId), "left_anti")
+    val droppedIds = tagged.filter(!col("__keep")).select(RowId)
     val quarantine = raw.join(droppedIds, Seq(RowId), "left_semi").drop(RowId)
 
-    val total = typed.count()
-    val nValid = validC.count()
-    val nInvalid = invalidC.count()
+    // Metrics: ONE aggregation action over the tagged frame
+    def cnt(c: org.apache.spark.sql.Column) = count(when(c, 1))
+    val m = tagged.agg(
+      count(lit(1)).as("total"),
+      cnt(col("__keep")).as("nValid"),
+      cnt(col("__fresh") && !col("__valid")).as("nInvalid")).head()
+    val total = m.getLong(0)
     val metrics = Metrics(
       totalRows = total,
-      inserted = nValid,
-      duplicates = total - nValid - nInvalid,
-      invalid = nInvalid)
+      inserted = m.getLong(1),
+      duplicates = total - m.getLong(1) - m.getLong(2),
+      invalid = m.getLong(2))
 
     // S8 (reference: logging_module.py + load_quality.py:145-146)
     org.slf4j.LoggerFactory.getLogger(getClass).info(
@@ -108,10 +117,10 @@ object QualityLoad {
         s"${metrics.totalRows} (${metrics.duplicates} duplicates, ${metrics.invalid} invalid)")
 
     // DDL column order (ipynb cell-3 insert order, load_quality.py:114)
-    val out = validC.select(
+    val out = tagged.filter(col("__keep")).select(
       col("facility_id"), col("hospital_type"), col("hospital_ownership"),
       col("emergency_services"), col("hospital_overall_rating"), col("data_date"))
 
-    Result(out, quarantine, metrics, caches = Seq(raw, validC, invalidC))
+    Result(out, quarantine, metrics, caches = Seq(raw, tagged))
   }
 }
