@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -44,8 +43,8 @@ object Bench {
       }
     }))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // 32 executor threads — the engine's local[32] design point (and
-    // BenchOne's long-standing default). PROTOCOL BREAK (r13,
+    // 32 executor threads — the engine's local[32] design point.
+    // PROTOCOL BREAK (r13,
     // BASELINE.md): this ran at 4 for rounds 1-12, which is what
     // split every heavy tier reading into two irreproducible classes
     // — builder passes exported CPUS=32 and read q68 ×100 at ~13 s
@@ -117,9 +116,9 @@ object Bench {
     // budget and returns what it timed — the pass survives truncated
     // rather than the artifact dying whole
     def timeOnce(dir: String, skip: Set[String],
-                 keep: Option[Set[String]] = None,
-                 gcBefore: Boolean = false,
-                 stage: String = "main"): Seq[(String, Double)] = {
+                 keep: Option[Set[String]],
+                 gcBefore: Boolean,
+                 stage: String): Seq[(String, Double)] = {
       val qs = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter(q => selected(q._1)).filter(q => keep.forall(_.contains(q._1)))
         .filterNot(q => skip(q._1))
@@ -358,10 +357,10 @@ object Bench {
     // bracket exceeds its bound (probe bound = 1.5× the baseline —
     // the same ×~1.4-of-idle rule the CPU bracket uses).
     def timeTierAdjudicated(dir: String, keep: Set[String], nreps: Int,
-                            pin: () => Unit = () => (),
-                            probe: Option[() => Double] = None,
-                            entryCal: Double = 0.0,
-                            onGate: Seq[(String, Double, Double, Boolean)] => Unit = _ => ())
+                            pin: () => Unit,
+                            probe: Option[() => Double],
+                            entryCal: Double,
+                            onGate: Seq[(String, Double, Double, Boolean)] => Unit)
         : Seq[(String, Double, Double, Boolean)] = {
       val probeIdle = probe.map(p => (1 to 3).map(_ => p()).min)
       val probeMax = probeIdle.map(_ * 1.5).getOrElse(Double.PositiveInfinity)
@@ -441,7 +440,7 @@ object Bench {
           }
           // one UNTIMED warm execution: tier queries are measured at
           // nreps=2, which sits on the JIT warm-up slope for the
-          // heavy gram-explode shapes (q68 ×100 BenchOne curve:
+          // heavy gram-explode shapes (q68 ×100 rep curve, BASELINE.md:
           // 19.2 → 10.6 → ... → 9.7 steady) — the first timed rep
           // must not pay whole-stage-codegen compilation
           try { fn(spark, dir).count(): Unit }

@@ -169,7 +169,7 @@ object ExtQueries2 {
     * two-stage probe with nprobe = nlist must equal brute force over
     * the slice (q100's oracle verbatim; the q100 discipline applied
     * to the refinement stage). Lossy recall-vs-memory operating
-    * points are measured in RecallCheck, not asserted.
+    * points are measured (SURVEY §8), not asserted.
     */
   val q187 = Q(
     "q187_rq_exact",
@@ -406,7 +406,7 @@ object ExtQueries2 {
     * force bit for bit under the degenerate codebook — q100's oracle
     * verbatim, gating the rotation expression, its float round-trip,
     * and the composition. The LEARNED rotation (exact Gram → Jacobi →
-    * balanced allocation) is measured in RecallCheck and OpqSpec
+    * balanced allocation) is measured in SURVEY §8 and OpqSpec
     * (MSE on a correlated corpus), not asserted.
     */
   val q191 = Q(

@@ -361,7 +361,7 @@ object ExtQueries3 {
     * ACTUALLY APPLIED rotation (array_position over rotateExpr
     * output), so the whole learned path — exact Gram agg → Jacobi →
     * balance → distributed application — is inside the gate. (q191
-    * keeps gating the identity composition; RecallCheck keeps the
+    * keeps gating the identity composition; SURVEY §8 keeps the
     * measured MSE value of learned rotations on correlated corpora.)
     */
   val q202 = Q(

@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** One local-session factory for every main (Verify, Bench, BenchOne,
-  * ScaleCheck) — the config stanza (UTC, nanos-as-long for the events
+/** One local-session factory for every main (Verify, Bench, Probe)
+  * — the config stanza (UTC, nanos-as-long for the events
   * table, AQE, partitions=cores) must stay identical across them or
   * results drift between the correctness and benchmark surfaces.
   */
@@ -25,7 +25,7 @@ object GraftSession {
     *     decoded) leaves headroom for the operator's hash tables.
     *   - AQE on (default) + skewJoin on (default): runtime re-plan
     *     converts sort-merge joins to broadcast when a side measures
-    *     small, splits skewed partitions — SURVEY §8's SkewCheck table
+    *     small, splits skewed partitions — SURVEY §8's skew table
     *     documents when the built-ins suffice vs ops.Skew.saltedAgg.
     *   - No spark.sql.shuffle.partitions in operator code: every
     *     operator here derives parallelism from config, never hardcodes.

@@ -16,14 +16,15 @@ import AragonSchema._
   * this, load_hhs.py:154; we carry it in the same scan) → typed
   * projections → anti-join dedup vs existing-key snapshots → validate-
   * split → three inserts + quarantine. Narrow except the dedup joins
-  * (broadcast of key snapshots) and the intra-file firstPerKey (one
-  * shuffle on the key). Only the consumed columns ride past the scan:
+  * (broadcast of key snapshots) and the intra-file first-row windows
+  * `wPk` / `wBed` (one shuffle per key). Only the consumed columns ride past the scan:
   * the shuffles, joins and tagged cache carry the 17 payload columns
   * plus row pins, while the full-width cached scan serves quarantine.
   *
   * Semantic deltas vs the reference, knowingly accepted (SURVEY §7.3):
-  * per-row insert-order dedup is reproduced deterministically by
-  * firstPerKey on file position; per-file txn atomicity becomes
+  * per-row insert-order dedup is reproduced deterministically by the
+  * `wPk` / `wBed` row_number windows over (file name, file position);
+  * per-file txn atomicity becomes
   * per-partition sink txns.
   */
 object HhsLoad {

@@ -78,7 +78,7 @@ object DedupClusters {
     * are consumed (written, counted, joined-and-materialized) —
     * storage returns to its pre-call level, which is what lets a
     * long-lived service session run CC per batch indefinitely
-    * (pinned: ScaleCheck's 10-invocation flat-storage probe). The
+    * (pinned: DedupClustersSpec's 10-invocation release test). The
     * labels remain CORRECT after release (the cut keeps recompute
     * lineage); consuming them again merely re-executes.
     */
@@ -89,8 +89,8 @@ object DedupClusters {
   }
 
   /** [[connectedComponents]] plus the number of star rounds executed —
-    * exposed so tests and ScaleCheck can pin the O(log n) round bound
-    * (a 500-link chain must converge in ~log rounds, not 500).
+    * exposed so DedupClustersSpec can pin the O(log n) round bound
+    * (a 400-link chain must converge in ~log rounds, not 400).
     */
   private[graft] def componentsWithRounds(pairs: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
     val (labels, iters, _) = componentsImpl(pairs, maxIter)

@@ -316,8 +316,8 @@ object EmbeddingSearch {
   /** Fold a new document batch into the index WITHOUT re-clustering:
     * assign new vectors to the stored centroids, union the assignment
     * table. Cells drift from optimal as the corpus shifts — rebuild
-    * with refineIters ≥ 1 when probe recall degrades (measured via
-    * RecallCheck), exactly the rebuild cadence a production IVF runs.
+    * with refineIters ≥ 1 when probe recall degrades (see
+    * [[ivfRebuildAdvice]]), exactly the rebuild cadence a production IVF runs.
     */
   def extendIvfIndex(index: IvfIndex, newDocs: DataFrame,
                      id: String, vec: String): IvfIndex = {
@@ -343,8 +343,8 @@ object EmbeddingSearch {
     * per-cell telemetry remains comparable across the rebuild. The
     * probe CONTRACT is preserved — same centroids/assignments schema,
     * [[ivfProbe]]/[[hardNegativesIvf]] run unchanged — but routing
-    * changes by design: that is what a rebuild is for (RecallCheck
-    * measures the recovery on a drifted fixture).
+    * changes by design: that is what a rebuild is for (IvfIndexSpec
+    * pins the recall recovery on a drifted corpus).
     */
   def rebuildIvfIndex(index: IvfIndex, corpus: DataFrame, id: String, vec: String,
                       refineIters: Int = 2): IvfIndex = {
@@ -579,9 +579,9 @@ object EmbeddingSearch {
     *
     * With nprobe == nlist every cell is probed and the output is
     * row-identical to [[hardNegatives]] (pinned by the q92 oracle);
-    * at nprobe < nlist negatives-recall vs brute force is measured in
-    * RecallCheck — cells that cover the true top-k make the two
-    * equal, the planted-neighbor property the spec pins.
+    * at nprobe < nlist negatives-recall vs brute force is measured
+    * (SURVEY §8) — cells that cover the true top-k make the two
+    * equal, the planted-neighbor property IvfIndexSpec pins.
     *
     * @param pairs (qid, qvec, pos_id) — corpus-sized is fine
     */
@@ -826,7 +826,7 @@ object EmbeddingSearch {
     * so the rerank scores each candidate exactly once. Lifts the
     * single-band recall plateau while keeping the one-shuffle
     * bucket-join shape — the niche where IVF's assignment pass isn't
-    * wanted. Measured (RecallCheck, sf0.01×10 fixture): single-band
+    * wanted. Measured (SURVEY §8, sf0.01×10 fixture): single-band
     * tops out at 88-92% recall@10 at ANY bits; bits=4 bands=8 reaches
     * 97.4% and bits=4 bands=12 98.8%, both FASTER than single-band
     * bits=8 (smaller per-band buckets, so the amplified union is

@@ -464,7 +464,7 @@ object MinHashLsh {
     * mass above 1−p right of it is missed recall. Pick the b whose
     * knee brackets the policy threshold, then confirm with a measured
     * recall table — this is the arithmetic companion to the measured
-    * RecallCheck, not a substitute.
+    * recall tables (SURVEY §8), not a substitute.
     *
     * Output: (bands, r, j_ppm, p_ppm), all BIGINT.
     */

@@ -73,8 +73,6 @@ object Multimodal {
 
   /** DataFrame-level decode keeping schema explicit for SQL users. */
   def withMetadata(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     decode(df.as[MediaRow]).toDF()
   }
 
@@ -633,7 +631,6 @@ object Multimodal {
     */
   def mp4SampleStats(id: Long, bytes: Array[Byte]): Seq[SampleStats] = {
     def be32(o: Int): Long = be32At(bytes, o)
-    def be64(o: Int): Long = (be32(o) << 32) | be32(o + 4)
     if (bytes.length < 8) return Seq.empty
     val top = mp4Boxes(bytes, 0, bytes.length)
     if (!top.exists(_._3 == "ftyp")) return Seq.empty
@@ -2882,7 +2879,6 @@ object Multimodal {
     * exists; generation is seeded by media_id so plans are reproducible).
     */
   def syntheticTable(spark: SparkSession, n: Int): Dataset[MediaRow] = {
-    import spark.implicits._
     spark.range(n.toLong).map { i =>
       val w = 64 + (i % 16).toInt * 32
       val h = 64 + (i % 9).toInt * 48

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   *     O(len + |starts|) per row with NO shuffle. Even a document
   *     that is pure boilerplate (every position flagged) costs one
   *     linear pass, so corpus inflation stress stays
-  *     input-proportional (ScaleCheck, SURVEY §8).
+  *     input-proportional (SURVEY §8, scale design notes).
   *
   * Determinism: md5 keys and integer arithmetic only — bit-identical
   * on any engine, partitioning-invariant (oracle-checkable end to

@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * d2 = |s|² − 2·s·c + |c|² expansion evaluates to exactly 0.0 in IEEE
   * arithmetic when s == c (a − 2a + a), so the degenerate argmin is
   * exact, not approximately exact. Lossy operating points are measured
-  * (RecallCheck: compression-vs-recall table), not asserted.
+  * (SURVEY §8: compression vs recall), not asserted.
   */
 object VectorQuant {
 
@@ -259,7 +259,7 @@ object VectorQuant {
     * against their RECONSTRUCTED vectors — a per-row decode expression,
     * no corpus join anywhere in the plan. With the degenerate codebook
     * the output is bit-identical to the exact probe (gate q100); at
-    * lossy operating points recall is measured in RecallCheck.
+    * lossy operating points recall is measured (SURVEY §8), not asserted.
     */
   def ivfProbePq(index: PqIvfIndex,
                  queries: DataFrame, queryId: String, queryVec: String,
@@ -414,7 +414,7 @@ object VectorQuant {
     * codebook plus a stage-2 codebook trained on the stage-1
     * residuals. At the same total code budget this refines where
     * plain PQ truncates — the classic RQ/two-level ADC layout — and
-    * recall at fixed memory is measured in RecallCheck, not asserted.
+    * recall at fixed memory is measured (SURVEY §8), not asserted.
     */
   final case class RqBooks(book1: PqCodebook, book2: PqCodebook)
 

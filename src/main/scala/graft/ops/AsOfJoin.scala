@@ -61,7 +61,7 @@ object AsOfJoin {
   private def asof(left: DataFrame, right: DataFrame, keys: Seq[String],
                    leftTs: String, rightTs: String,
                    rightTieBreak: Seq[String], forward: Boolean,
-                   tolerance: Option[Long] = None): DataFrame = {
+                   tolerance: Option[Long]): DataFrame = {
     val lPayload = left.columns.toSeq.filterNot(keys.contains)
     val rPayload = right.columns.toSeq.filterNot(c => keys.contains(c) || c == rightTs)
     require(lPayload.intersect(rPayload).isEmpty,

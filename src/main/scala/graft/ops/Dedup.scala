@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Deduplication operators (SURVEY.md §2.3 D1–D4) — the reference's
   * signature operation, generalized.
@@ -40,20 +39,6 @@ object Dedup {
     val snap0 = existing.select(keys.map(col): _*).dropDuplicates(keys)
     val snap = if (broadcastExisting) broadcast(snap0) else snap0
     incoming.join(snap, keys, "left_semi")
-  }
-
-  /** Intra-batch dedup, deterministic: keep the row with the smallest
-    * `tieBreaker` per key (the reference keeps first-inserted,
-    * load_hhs.py:75-103 — insert order ≈ file order, so a stable
-    * tie-break reproduces the net effect deterministically, unlike
-    * dropDuplicates which keeps an arbitrary row).
-    *
-    * One shuffle on `keys`; the window + filter is codegen'd and spills
-    * safely at scale.
-    */
-  def firstPerKey(df: DataFrame, keys: Seq[String], tieBreaker: Column): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(tieBreaker.asc)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Plain distinct on a projection (intra-batch set dedup). */

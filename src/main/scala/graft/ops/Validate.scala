@@ -10,26 +10,21 @@ import org.apache.spark.sql.functions._
   *
   * Rows where a predicate is NULL count as VALID (the reference only
   * rejects `not null AND value < 0`); pass explicit isNotNull predicates
-  * to tighten. The two frames partition the input exactly: every input
-  * row lands in exactly one side (property-tested in ValidateSpec).
+  * to tighten. `validPredicate` is never NULL, so the rows it keeps and
+  * the rows it rejects partition the input exactly: every input row
+  * lands in exactly one side (property-tested in OpsSpec).
   *
-  * Scale: both sides are narrow filters over the same scan; Spark will
-  * read the source twice unless the caller caches — at 100 TB prefer a
-  * single pass that flags rows and filters both sides from one cached
-  * frame (see the tagged frame in `graft.aragon.HhsLoad.load`) or accept
-  * the double scan when the source is columnar and the predicate prunes
-  * well.
+  * Scale: two filters over the same scan read the source twice unless
+  * the caller caches — at 100 TB flag rows in a single pass with
+  * `tagged` and filter both sides from one cached frame (see the tagged
+  * frame in `graft.aragon.HhsLoad.load`), or accept the double scan when
+  * the source is columnar and the predicate prunes well.
   */
 object Validate {
 
   /** Conjunction where NULL predicate results count as valid. */
   def validPredicate(preds: Seq[Column]): Column =
     preds.map(p => coalesce(p, lit(true))).reduce(_ && _)
-
-  def validateSplit(df: DataFrame, preds: Seq[Column]): (DataFrame, DataFrame) = {
-    val ok = validPredicate(preds)
-    (df.filter(ok), df.filter(!ok))
-  }
 
   /** Single-pass variant: tag rows instead of splitting, so one scan can
     * feed both sinks (filter on `__valid` downstream).

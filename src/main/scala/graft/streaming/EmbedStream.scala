@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.ext.EmbeddingSearch
 import graft.ext.EmbeddingSearch.IvfIndex
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming embedding serving: route a QUERY STREAM against a

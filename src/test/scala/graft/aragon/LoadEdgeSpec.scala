@@ -1,8 +1,7 @@
 package graft.aragon
 
-import graft.SparkTestBase
+import graft.{JobLog, SparkTestBase}
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{SparkPlan, columnar}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
@@ -10,8 +9,8 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 /** Edge semantics of the two loaders that the reference exercises only
   * implicitly: boolean-column insert rejection (quality), multi-file
   * deterministic dedup order (HHS), plus the loaders' cost shape: the
-  * HHS load moves only the columns it consumes, and the quality load's
-  * job count is pinned.
+  * HHS load moves only the columns it consumes, and both loads' job
+  * counts are pinned.
   */
 class LoadEdgeSpec extends SparkTestBase {
 
@@ -134,33 +133,8 @@ class LoadEdgeSpec extends SparkTestBase {
     val date = java.sql.Date.valueOf("2022-01-01")
     val existing = Seq(("F4", date), ("F1", java.sql.Date.valueOf("2021-10-01")))
       .toDF("facility_id", "data_date")
-
-    val group = "quality-load-job-pin"
-    val sentinel = "quality-load-job-pin-done"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(jobs.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val r = try {
-      sc.setJobGroup(group, "QualityLoad.load")
-      val loaded = QualityLoad.load(spark, csv, date, existing)
-      // the listener bus is asynchronous but ordered: once the sentinel
-      // job's start arrives, every job the load submitted has arrived
-      sc.setJobGroup(sentinel, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      loaded
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.contains(sentinel), "listener bus did not deliver the sentinel job")
-    val loadJobs = jobs.toArray.count(_ == group)
+    val (r, jobs) = JobLog.record(spark)(QualityLoad.load(spark, csv, date, existing))
+    val loadJobs = jobs.size
 
     // null facility_id stays fresh (as under a left anti join); F4 is a
     // duplicate at this date, F1 only at another date
@@ -169,5 +143,37 @@ class LoadEdgeSpec extends SparkTestBase {
     assert(r.quarantine.select("Facility ID").as[String].collect().toSet == Set("F2", "F3", "F4"))
     r.unpersist()
     assert(loadJobs <= 6, s"QualityLoad.load submitted $loadJobs jobs")
+  }
+
+  test("HHS: the load submits at most 10 Spark jobs before its outputs are written") {
+    // Measured at 10 jobs on Spark 4.1 with AQE on: the CSV header read,
+    // then the adaptive stages of the one metrics aggregation over the
+    // cached tagged frame, among them the three key-snapshot broadcasts
+    // and the two window shuffles.
+    val dir = Files.createTempDirectory("hjobs")
+    val header = ("hospital_pk,hospital_name,state,address,city,zip,fips_code," +
+      "geocoded_hospital_address,collection_week," + AragonSchema.bedMetrics.mkString(","))
+    def row(pk: String, week: String, v: Int) =
+      s"$pk,name $pk,PA,addr,city,15213,42003,POINT (0 0),$week," +
+        AragonSchema.bedMetrics.map(_ => v.toString).mkString(",")
+    val csv = write(dir.resolve("w.csv"), header,
+      row("H1", "2022-01-07", 1),  // hospital and location exist, new week
+      row("H2", "2022-01-07", -3), // negative bed metric → invalid
+      row("H3", "2022-01-07", 2),
+      row("H3", "2022-01-07", 5),  // in-file duplicate
+      row("H4", "2022-01-07", 4))  // bed key already loaded
+    val pks = Seq("H1", "H4").toDF("hospital_pk")
+    val beds = Seq(("H1", java.sql.Date.valueOf("2021-12-31")),
+      ("H4", java.sql.Date.valueOf("2022-01-07"))).toDF("hospital_pk", "collection_week")
+
+    val (r, jobs) = JobLog.record(spark)(HhsLoad.load(spark, csv, pks, pks, beds))
+    val loadJobs = jobs.size
+
+    assert(r.metrics == HhsLoad.Metrics(totalRows = 5,
+      hospitalsInserted = 2, hospitalsDup = 3, locationsInserted = 2, locationsDup = 3,
+      bedsInserted = 2, bedsDup = 2, bedsInvalid = 1))
+    assert(r.beds.select("hospital_fk").as[String].collect().toSet == Set("H1", "H3"))
+    r.unpersist()
+    assert(loadJobs <= 10, s"HhsLoad.load submitted $loadJobs jobs")
   }
 }

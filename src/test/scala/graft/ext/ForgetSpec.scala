@@ -65,6 +65,17 @@ class ForgetSpec extends SparkTestBase {
     assert(retracted == rebuilt)
   }
 
+  test("retractComponents relabels only the components that lost a member") {
+    // component B is stored under a label connectedComponents never
+    // produces (99, not its min id): recomputed, it would come back as 10
+    val ps = pairs(1L -> 2L, 2L -> 3L, 10L -> 11L, 11L -> 12L)
+    val stored = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 99L, 11L -> 99L, 12L -> 99L)
+      .toDF("id", "component")
+    val out = Forget.retractComponents(stored, ps, ids(1L))
+      .orderBy("id").as[(Long, Long)].collect().toSeq
+    assert(out == Seq(2L -> 2L, 3L -> 2L, 10L -> 99L, 11L -> 99L, 12L -> 99L))
+  }
+
   test("empty delete set is the identity on labels") {
     val ps = pairs(1L -> 2L, 2L -> 3L, 7L -> 8L)
     val stored = DedupClusters.connectedComponents(ps)

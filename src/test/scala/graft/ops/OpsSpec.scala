@@ -54,25 +54,24 @@ class OpsSpec extends SparkTestBase {
     assert(out == Set((1, "a"), (3, "c")))
   }
 
-  test("firstPerKey keeps the smallest tie-breaker deterministically") {
-    val df = Seq((1, 10, "first"), (1, 20, "second"), (2, 5, "only")).toDF("k", "ord", "v")
-    val out = Dedup.firstPerKey(df, Seq("k"), col("ord")).orderBy("k")
-      .select("v").as[String].collect().toSeq
-    assert(out == Seq("first", "only"))
-  }
-
-  test("P9 validateSplit partitions the input exactly; nulls are valid") {
+  test("P9 tagged flags negatives invalid; nulls are valid") {
     val df = Seq[(Int, java.lang.Double)]((1, 5.0), (2, -3.0), (3, null))
       .toDF("id", "v")
-    val (ok, bad) = Validate.validateSplit(df, Validate.nonNegative(Seq("v")))
-    assert(ok.select("id").as[Int].collect().toSet == Set(1, 3))
-    assert(bad.select("id").as[Int].collect().toSet == Set(2))
+    val flags = Validate.tagged(df, Validate.nonNegative(Seq("v")))
+      .select("id", "__valid").as[(Int, Boolean)].collect().toMap
+    assert(flags == Map(1 -> true, 2 -> false, 3 -> true))
+    // a bare comparison is NULL on a null value; validPredicate counts it valid
+    val bare = Validate.tagged(df, Seq(col("v") >= 0))
+      .filter(col("__valid")).select("id").as[Int].collect().toSet
+    assert(bare == Set(1, 3))
   }
 
   test("P9 property: valid ⊎ quarantine = input, no row lost or duplicated") {
-    samples(Gen.listOf(Gen.choose(-100.0, 100.0)), 10).foreach { vs =>
+    val value = Gen.option(Gen.choose(-100.0, 100.0)).map(_.map(Double.box).orNull)
+    samples(Gen.listOf(value), 10).foreach { vs =>
       val df = vs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("id", "v")
-      val (ok, bad) = Validate.validateSplit(df, Seq(col("v") >= 0))
+      val valid = Validate.validPredicate(Seq(col("v") >= 0))
+      val (ok, bad) = (df.filter(valid), df.filter(!valid))
       assert(ok.count() + bad.count() == vs.size)
       val ids = ok.select("id").as[Int].collect().toSet ++
         bad.select("id").as[Int].collect().toSet
@@ -112,17 +111,6 @@ class OpsSpec extends SparkTestBase {
       assert(kept.count() + dropped.count() == rows.size)
       assert(kept.filter(col("k") <= 25).count() == 0)
       assert(dropped.filter(col("k") > 25).count() == 0)
-    }
-  }
-
-  test("firstPerKey property: exactly one survivor per key, the minimum tie-breaker") {
-    val pairs = Gen.nonEmptyListOf(Gen.choose(0, 20))
-    samples(pairs, 8).foreach { ks =>
-      val df = ks.zipWithIndex.map { case (k, i) => (k, i) }.toDF("k", "ord")
-      val out = Dedup.firstPerKey(df, Seq("k"), col("ord"))
-        .as[(Int, Int)].collect().toMap
-      val expect = ks.zipWithIndex.groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
-      assert(out == expect)
     }
   }
 
