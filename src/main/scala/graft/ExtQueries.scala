@@ -209,25 +209,15 @@ object ExtQueries {
             SELECT user_id, CAST(sum(s) AS BIGINT) AS n_sessions, count(*) AS n_events
             FROM m GROUP BY user_id ORDER BY user_id"""))
 
-  /** MinHash-LSH near-dedup over documents ∪ 20 planted mutations (ids
-    * shifted by 100000). Hash-based → no SQL oracle (driver records a
-    * rows-only check); the planted pairs make the expected output
-    * non-empty and order-stable, and NearDupSpec pins exact behavior.
+  /** MinHash-LSH near-dedup over the whole documents table ∪ 20
+    * planted mutations (ids shifted by 100000): the corpus-wide run of
+    * q45's portable pipeline, hash-checked by the same oracle
+    * generator ([[minhashNearDupSql]]).
     */
   val q28 = Q(
     "q28_minhash_neardup",
-    (s, dir) => {
-      import s.implicits._
-      val docs = t(s, dir, "documents").select($"doc_id", $"text")
-      val planted = docs.filter($"doc_id" < 20)
-        .select(($"doc_id" + 100000L).as("doc_id"),
-          concat($"text", lit(" mutated tail token")).as("text"))
-      MinHashLsh.nearDupPairs(docs.unionAll(planted), $"doc_id", $"text",
-          n = 3, k = 64, bands = 16, threshold = 0.5,
-          shingler = ShingleJaccard.wordShingles _)
-        .orderBy($"id1", $"id2")
-    },
-    None)
+    (s, dir) => minhashNearDup(s, dir, maxDoc = None, planted = 20),
+    Some(minhashNearDupSql(maxDoc = None, planted = 20)))
 
   /** SimHash near-dedup, same planted-mutation scheme (rows-only). */
   val q29 = Q(
@@ -660,10 +650,6 @@ object ExtQueries {
                    CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
             FROM events GROUP BY event_type ORDER BY event_type"""))
 
-  /** Oracle SQL for the PORTABLE MinHash pipeline — generated so the
-    * slot constants are the single source of truth shared with
-    * MinHashLsh.portableMul/portableAdd.
-    */
   /** SQL text of MinHashLsh.portableHash32 over a column named `h`
     * (md5 hex): 8 nibbles Horner-folded into a BIGINT in [0, 2^32).
     */
@@ -676,20 +662,49 @@ object ExtQueries {
     }
   }
 
-  private def q45Sql: String = {
-    val horner = hornerSql
-    val slotVals = (0 until 8).map(i =>
+  /** SQL VALUES rows `(i, portableMul(i), portableAdd(i))` for slots
+    * 0..k-1 — the slot constants' single source of truth shared with
+    * MinHashLsh.portableMul/portableAdd.
+    */
+  private[graft] def portableSlotsSql(k: Int): String =
+    (0 until k).map(i =>
       s"($i, ${MinHashLsh.portableMul(i)}, ${MinHashLsh.portableAdd(i)})").mkString(", ")
+
+  /** Spark side of the portable MinHash gates: `documents` (doc_id <
+    * maxDoc when given) ∪ copies of doc_id < planted with a mutated
+    * tail, ids shifted by 100000, through
+    * MinHashLsh.nearDupPairsPortable (k = 8, bands = 4, exact Jaccard
+    * ≥ 0.5).
+    */
+  private def minhashNearDup(s: org.apache.spark.sql.SparkSession, dir: String,
+                             maxDoc: Option[Int], planted: Int) = {
+    import s.implicits._
+    val base = t(s, dir, "documents").select($"doc_id", $"text")
+    val docs = maxDoc.fold(base)(m => base.filter($"doc_id" < m))
+    val mutated = base.filter($"doc_id" < planted)
+      .select(($"doc_id" + 100000L).as("doc_id"),
+        concat($"text", lit(" mutated tail token")).as("text"))
+    MinHashLsh.nearDupPairsPortable(docs.unionAll(mutated), $"doc_id", $"text",
+        n = 3, k = 8, bands = 4, threshold = 0.5)
+      .orderBy($"id1", $"id2")
+  }
+
+  /** Oracle SQL of [[minhashNearDup]]: the portable pipeline mirrored
+    * step for step (md5 base hash, slot permutations, band keys,
+    * bucket join, exact rerank).
+    */
+  private def minhashNearDupSql(maxDoc: Option[Int], planted: Int): String = {
+    val keep = maxDoc.fold("")(m => s" WHERE doc_id < $m")
     val sigCols = (0 until 8).map(i => s"max(CASE WHEN i=$i THEN m END) AS m$i").mkString(", ")
     val bandSelects = (0 until 4).map { bd =>
       val ms = (bd * 2 until bd * 2 + 2).map(i => s"CAST(m$i AS VARCHAR)").mkString(", ")
       s"SELECT doc_id, md5(concat_ws(',', '$bd', $ms)) AS bk FROM sig"
     }.mkString(" UNION ALL ")
     s"""WITH d AS (
-       |  SELECT doc_id, text FROM documents WHERE doc_id < 150
+       |  SELECT doc_id, text FROM documents$keep
        |  UNION ALL
        |  SELECT doc_id + 100000, text || ' mutated tail token'
-       |  FROM documents WHERE doc_id < 10),
+       |  FROM documents WHERE doc_id < $planted),
        |toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM d),
        |win AS (SELECT doc_id, t,
        |               unnest(generate_series(1, greatest(len(t) - 2, 1))) AS i
@@ -699,8 +714,8 @@ object ExtQueries {
        |                   ELSE t[i] || ' ' || t[i+1] || ' ' || t[i+2] END AS s
        |       FROM win),
        |hx AS (SELECT doc_id, s, md5(s) AS h FROM sh),
-       |hv AS (SELECT doc_id, $horner AS h32 FROM hx),
-       |slots(i, a, b) AS (VALUES $slotVals),
+       |hv AS (SELECT doc_id, $hornerSql AS h32 FROM hx),
+       |slots(i, a, b) AS (VALUES ${portableSlotsSql(8)}),
        |mins AS (SELECT doc_id, i, min((h32 * a + b) % 4294967296) AS m
        |         FROM hv CROSS JOIN slots GROUP BY doc_id, i),
        |sig AS (SELECT doc_id, $sigCols FROM mins GROUP BY doc_id),
@@ -721,25 +736,14 @@ object ExtQueries {
        |ORDER BY id1, id2""".stripMargin
   }
 
-  /** MinHash+LSH near-dedup, portable variant: the full pipeline (md5
-    * base hash, slot permutations, band keys, bucket join, exact
-    * rerank) mirrored step-for-step in the oracle — upgrading the
-    * minhash FAMILY from rows-only (q28) to hash-checked.
+  /** MinHash+LSH near-dedup, portable pipeline on a 150-doc slice ∪ 10
+    * planted mutations: the small, fast member of the hash-checked
+    * minhash family (q28 runs the same pipeline corpus-wide).
     */
   val q45 = Q(
     "q45_minhash_portable",
-    (s, dir) => {
-      import s.implicits._
-      val base = t(s, dir, "documents").select($"doc_id", $"text")
-      val docs = base.filter($"doc_id" < 150)
-      val planted = base.filter($"doc_id" < 10)
-        .select(($"doc_id" + 100000L).as("doc_id"),
-          concat($"text", lit(" mutated tail token")).as("text"))
-      MinHashLsh.nearDupPairsPortable(docs.unionAll(planted), $"doc_id", $"text",
-          n = 3, k = 8, bands = 4, threshold = 0.5)
-        .orderBy($"id1", $"id2")
-    },
-    Some(q45Sql))
+    (s, dir) => minhashNearDup(s, dir, maxDoc = Some(150), planted = 10),
+    Some(minhashNearDupSql(maxDoc = Some(150), planted = 10)))
 
   private def q46Sql: String = {
     val bitVals = (0 until 32).map(b => s"($b, ${1L << b})").mkString(", ")
@@ -1620,8 +1624,6 @@ object ExtQueries {
 
   private def q66Sql: String = {
     val horner = hornerSql
-    val slotVals = (0 until 8).map(i =>
-      s"($i, ${MinHashLsh.portableMul(i)}, ${MinHashLsh.portableAdd(i)})").mkString(", ")
     val sigCols = (0 until 8).map(i => s"max(CASE WHEN i=$i THEN m END) AS m$i").mkString(", ")
     val bandSelects = (0 until 4).map { bd =>
       val ms = (bd * 2 until bd * 2 + 2).map(i => s"CAST(m$i AS VARCHAR)").mkString(", ")
@@ -1650,7 +1652,7 @@ object ExtQueries {
        |       FROM win),
        |hx AS (SELECT side, doc_id, md5(s) AS h FROM sh),
        |hv AS (SELECT side, doc_id, $horner AS h32 FROM hx),
-       |slots(i, a, b) AS (VALUES $slotVals),
+       |slots(i, a, b) AS (VALUES ${portableSlotsSql(8)}),
        |mins AS (SELECT side, doc_id, i, min((h32 * a + b) % 4294967296) AS m
        |         FROM hv CROSS JOIN slots GROUP BY side, doc_id, i),
        |sig AS (SELECT side, doc_id, $sigCols FROM mins GROUP BY side, doc_id),
@@ -3854,13 +3856,11 @@ object ExtQueries {
         .orderBy($"j", $"col")
     },
     Some {
-      val slotVals = (0 until 4).map(i =>
-        s"($i, ${MinHashLsh.portableMul(i)}, ${MinHashLsh.portableAdd(i)})").mkString(", ")
       s"""WITH toks AS (SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
                         FROM documents),
           hx AS (SELECT md5(tok) AS h FROM toks),
           hh AS (SELECT $hornerSql AS h32 FROM hx),
-          slots(j, mul, addc) AS (VALUES $slotVals),
+          slots(j, mul, addc) AS (VALUES ${portableSlotsSql(4)}),
           cells AS (SELECT j, (h32 * mul + addc) % 32 AS col FROM hh CROSS JOIN slots)
           SELECT CAST(j AS BIGINT) AS j, col, count(*) AS cnt
           FROM cells GROUP BY 1, 2 ORDER BY j, col"""
@@ -3951,7 +3951,7 @@ object ExtQueries {
             FROM agg JOIN tot USING (doc_id) ORDER BY doc_id"""))
 
   /** Compression-ratio screening, rows-only by design (DuckDB exposes
-    * no deflate, so no cross-engine mirror exists — the q28/q29
+    * no deflate, so no cross-engine mirror exists — the q29
     * precedent): corpus docs plus two planted rows (template spam that
     * must flag, prose that must not). Semantics are pinned in
     * CompressionSignalSpec: deterministic sizes, partition-layout

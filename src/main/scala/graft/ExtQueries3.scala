@@ -405,7 +405,7 @@ object ExtQueries3 {
     * ([[graft.ext.CompressionSignal.lzCoverage]]) — the deflate
     * signal's oracle-checkable twin (q117 stays the production face,
     * rows-only because DuckDB exposes no deflate; this gate closes
-    * the family's cross-engine check the way q45 does for q28).
+    * the family's cross-engine check the way q46 does for q29).
     * Corpus plus q117's planted rows: the 40×-repeated template spam
     * (coverage ≈ 97%, must flag) and the prose row (no 8-gram recurs
     * within 64 chars, coverage 0, must not), plus two rows planting

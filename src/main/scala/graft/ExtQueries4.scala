@@ -189,9 +189,6 @@ object ExtQueries4 {
     */
   private def q215Sql: String = {
     val horner = ExtQueries.hornerSql
-    val slotVals = (0 until 8).map(i =>
-      s"($i, ${graft.ext.MinHashLsh.portableMul(i)}, " +
-        s"${graft.ext.MinHashLsh.portableAdd(i)})").mkString(", ")
     val sigCols = (0 until 8)
       .map(i => s"max(CASE WHEN i=$i THEN m END) AS m$i").mkString(", ")
     val bandSelects = (0 until 4).map { bd =>
@@ -257,7 +254,7 @@ object ExtQueries4 {
        |        FROM mwin),
        |mhx AS (SELECT doc_id, s, md5(s) AS h FROM msh),
        |mhv AS (SELECT doc_id, $horner AS h32 FROM mhx),
-       |slots(i, a, b) AS (VALUES $slotVals),
+       |slots(i, a, b) AS (VALUES ${ExtQueries.portableSlotsSql(8)}),
        |mmin AS (SELECT doc_id, i, min((h32 * a + b) % 4294967296) AS m
        |         FROM mhv CROSS JOIN slots GROUP BY doc_id, i),
        |msig AS MATERIALIZED (SELECT doc_id, $sigCols FROM mmin GROUP BY doc_id),
@@ -515,9 +512,6 @@ object ExtQueries4 {
     */
   private def q216Sql: String = {
     val horner = ExtQueries.hornerSql
-    val slotVals = (0 until 8).map(i =>
-      s"($i, ${graft.ext.MinHashLsh.portableMul(i)}, " +
-        s"${graft.ext.MinHashLsh.portableAdd(i)})").mkString(", ")
     val sigCols = (0 until 8)
       .map(i => s"max(CASE WHEN i=$i THEN m END) AS m$i").mkString(", ")
     val bandSelects = (0 until 4).map { bd =>
@@ -564,7 +558,7 @@ object ExtQueries4 {
        |        FROM mwin),
        |mhv AS (SELECT side, doc_id, $horner AS h32
        |        FROM (SELECT side, doc_id, md5(s) AS h FROM msh) hx),
-       |slots(i, a, b) AS (VALUES $slotVals),
+       |slots(i, a, b) AS (VALUES ${ExtQueries.portableSlotsSql(8)}),
        |mmin AS (SELECT side, doc_id, i, min((h32 * a + b) % 4294967296) AS m
        |         FROM mhv CROSS JOIN slots GROUP BY side, doc_id, i),
        |msig AS MATERIALIZED (SELECT side, doc_id, $sigCols FROM mmin
@@ -1079,9 +1073,6 @@ object ExtQueries4 {
     },
     Some {
       val horner = ExtQueries.hornerSql
-      val slotVals = (0 until 8).map(i =>
-        s"($i, ${graft.ext.MinHashLsh.portableMul(i)}, " +
-          s"${graft.ext.MinHashLsh.portableAdd(i)})").mkString(", ")
       s"""WITH c AS MATERIALIZED (
          |  SELECT doc_id, text FROM documents
          |  UNION ALL
@@ -1101,7 +1092,7 @@ object ExtQueries4 {
          |        FROM mwin),
          |mhv AS (SELECT doc_id, $horner AS h32
          |        FROM (SELECT doc_id, md5(s) AS h FROM msh) hx),
-         |slots(i, a, b) AS (VALUES $slotVals),
+         |slots(i, a, b) AS (VALUES ${ExtQueries.portableSlotsSql(8)}),
          |mmin AS (SELECT doc_id, i, min((h32 * a + b) % 4294967296) AS m
          |         FROM mhv CROSS JOIN slots GROUP BY doc_id, i),
          |sg AS (SELECT doc_id, CAST(sum(m) AS BIGINT) AS ms FROM mmin

@@ -72,7 +72,7 @@ object CompressionSignal {
       .select(col("id"), col("n_raw"), col("n_gz"),
               (col("n_gz") * k < col("n_raw")).as("too_compressible"))
 
-  /** The ORACLE-CHECKABLE twin of the deflate signal (the q28/q45
+  /** The ORACLE-CHECKABLE twin of the deflate signal (the q29/q46
     * portable-twin pattern): LZ77-style fixed-window match coverage.
     * A position i of a document is COVERED when the `gram`-length
     * character n-gram starting there already occurred with start

@@ -8,126 +8,35 @@ import org.apache.spark.sql.functions._
   * quadratic in per-shingle document frequency; this is the standard
   * 100 TB alternative).
   *
-  * Pipeline (all codegen'd built-ins, no UDFs):
-  *   shingle set → ONE xxhash64 per shingle → k minhashes (min over
-  *   k bijective multiply-add mixes of that base hash) → b bands of
-  *   r = k/b hashes → band-hash bucket join → candidate pairs →
-  *   verify (signature-estimated or exact array-intersect Jaccard —
-  *   candidates are few, so the exact rerank happens on in-row
-  *   arrays, no explode).
+  * One hash family, portable end to end (every step has a plain-SQL
+  * mirror, so gates q28/q45 hash-match a DuckDB oracle):
+  *   distinct word n-gram shingles → ONE 32-bit md5-derived base hash
+  *   per shingle ([[portableHash32]]) → k slot minima of
+  *   (h·a_i + b_i) mod 2^32 → b bands of r = k/b minima, md5'd into a
+  *   band key → band bucket join → candidate pairs → verify (exact
+  *   shingle-set Jaccard in [[nearDupPairsPortable]], slot-agreement
+  *   estimate in [[selfNearDupEstimate]] / [[incrementalNearDup]]).
   *
-  * The "one hash, k permutations" trick: each string shingle is hashed
-  * ONCE; slot i applies `h * a_i + b_i` (a_i odd → a bijection on
-  * Z/2^64, i.e. a genuine permutation of hash space, the textbook
-  * minhash requirement). Versus k full string re-hashes this cuts the
-  * dominant per-row cost from k string hashes to one string hash + k
-  * long mul/adds, and shrinks the generated aggregate code (k wide
-  * hash calls → k two-op arithmetic exprs) — measured ~2x end-to-end
-  * at sf0.1, most of it in the first (codegen-compiling) run.
+  * The "one hash, k permutations" trick: each shingle is hashed ONCE;
+  * slot i applies an affine mix of that base hash, so the per-row cost
+  * is one digest plus k two-op long expressions inside one aggregate.
   *
   * Banding math: P(candidate) = 1 - (1 - j^r)^b; with k=128, b=32, r=4
   * the S-curve crosses 0.5 at j≈0.38 (an earlier revision of this note
   * claimed 0.59 — the [[bandingPlan]] table, pinned cross-engine by
   * gate q181, is the arithmetic of record).
   *
-  * Determinism: mix constants are splitmix64 of the slot index, folded
-  * into the plan as literals — the same signature on any cluster, any
-  * partitioning.
+  * Determinism: slot constants are splitmix64 of the slot index
+  * ([[portableMul]]/[[portableAdd]]), folded into the plan as literals
+  * — the same signature on any cluster, any partitioning, any engine.
   */
 object MinHashLsh {
 
-  /** k-minhash signature (array<long>) of a shingle array — the
-    * per-row composable form (interpreted HOFs; fine for small frames,
-    * the corpus path uses the MinHashAgg aggregate instead).
-    */
-  def signature(shingles: Column, k: Int): Column = {
-    val hs = transform(shingles, s => xxhash64(s))
-    array((0 until k).map(i =>
-      array_min(transform(hs, h => graft.functions.MixHash64.mix(h, i)))): _*)
-  }
-
-  /** Jaccard estimate from two signatures: fraction of agreeing slots. */
-  def estimateJaccard(sigA: Column, sigB: Column, k: Int): Column =
-    size(filter(zip_with(sigA, sigB, (a, b) => a === b), x => x)).cast("double") / k
-
-  /** Near-dup pairs with estimated (and optionally exact) Jaccard.
-    *
-    * @param n          character-shingle width
-    * @param k          minhashes (signature length)
-    * @param bands      LSH bands (k % bands == 0)
-    * @param threshold  min Jaccard to keep
-    * @param exact      verify candidates with exact shingle-set Jaccard
-    *                   (array_intersect on the pair row) instead of the
-    *                   signature estimate
-    * @param maxBucket  drop band buckets holding more than this many
-    *                   distinct signatures (hot-band guard; default
-    *                   unlimited = recall-complete — see bandedCandidates)
-    */
-  def nearDupPairs(df: DataFrame, id: Column, text: Column, n: Int = 3,
-                   k: Int = 128, bands: Int = 32, threshold: Double = 0.7,
-                   exact: Boolean = true,
-                   shingler: (Column, Int) => Column = ShingleJaccard.charShingles,
-                   maxBucket: Int = Int.MaxValue): DataFrame = {
-    require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
-    val r = k / bands
-
-    // Explode + k codegen'd min-aggregates instead of per-row array
-    // transforms: higher-order functions (transform/aggregate) are
-    // interpreted expressions outside whole-stage codegen — on a large
-    // corpus the explode/agg form is several times faster and spills
-    // safely. One shuffle on the doc id.
-    // note: measured at sf0.1 — checkpointing this exploded frame to
-    // share it between the signature and rerank branches does NOT help;
-    // native shingling is cheap enough that recomputation beats
-    // materialization
-    val ex = df.select(id.as("__id"), explode(shingler(text, n)).as("__sh"))
-    // base hash once per exploded shingle; the k permutations are cheap
-    // long mixes applied inside ONE signature aggregate (MinHashAgg) —
-    // k separate min() agg columns compile to a huge janino class and
-    // dominate cold-run time. Catalyst prunes __sh away on the
-    // signature branch and __h away on the rerank branch.
-    val hashed = ex.select(col("__id"), xxhash64(col("__sh")).as("__h"))
-    val sig = hashed.groupBy("__id")
-      .agg(graft.functions.MinHashAgg.minhash(col("__h"), k).as("__sig"))
-
-    // band hash = one multi-arg xxhash64 over the band's signature
-    // slots — no intermediate arrays; banded rows carry (gid, bandHash).
-    val bandCols = (0 until bands).map { bd =>
-      xxhash64((lit(bd) +:
-        (bd * r until (bd + 1) * r).map(i => col("__sig").getItem(i))): _*)
-    }
-    // candidate pairs are tiny (two ids per row) but feed three plan
-    // branches — materialize once (lazy local checkpoint) so the band
-    // join does not re-execute per branch (measured: relying on
-    // ReuseExchange instead is ~0.5s slower here — the three consumer
-    // subtrees diverge after optimization and re-execute). Retention
-    // caveat: checkpoint blocks are not released by unpersist, so they
-    // live until the session ends — acceptable for candidate frames
-    // (two ids per row), but long-lived sessions doing unbounded
-    // repeated dedup passes should recycle their SparkSession.
-    val cand = bandedCandidates(sig, Seq(col("__sig")), bandCols, maxBucket)
-      .localCheckpoint(false)
-
-    // attach payloads to the (few) surviving candidate pairs only (see
-    // exactRerank for the candidate-proportional shape)
-    val scored = if (exact) {
-      exactRerank(cand, df, id, text, shingler, n)
-    } else {
-      cand
-        .join(sig.select(col("__id").as("id1"), col("__sig").as("__sig1")), "id1")
-        .join(sig.select(col("__id").as("id2"), col("__sig").as("__sig2")), "id2")
-        .withColumn("jaccard", estimateJaccard(col("__sig1"), col("__sig2"), k))
-    }
-
-    scored.filter(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), col("jaccard"))
-  }
-
-  /** Hot-band-guarded candidate generation, shared by the xxhash64 and
-    * portable paths. `sig` is a per-document signature frame keyed by
-    * `__id`; `sigCols` is the signature representation (one array
-    * column, or k scalar min columns for the portable form); `bandKeys`
-    * are the band-hash expressions over those columns.
+  /** Hot-band-guarded candidate generation, shared by
+    * [[nearDupPairsPortable]] and [[selfNearDupEstimate]]. `sig` is a
+    * per-document signature frame keyed by `__id`; `sigCols` are its k
+    * slot-minimum columns; `bandKeys` are the band-hash expressions
+    * over those columns.
     *
     * Identical signatures (exact-duplicate documents — the pathological
     * bucket case: m identical docs used to put m rows in every one of
@@ -143,6 +52,13 @@ object MinHashLsh {
     * buckets holding more than that many DISTINCT signatures — the
     * boilerplate-band guard. A pair pruned from a hot bucket is still
     * found through any other shared band.
+    *
+    * Checkpoint retention: the blocks of a lazy local checkpoint (here
+    * and on the callers' candidate frames) are not released by
+    * unpersist, so they live until the session ends — acceptable for
+    * signature and candidate frames (k longs or two ids per row), but
+    * long-lived sessions doing unbounded repeated dedup passes should
+    * recycle their SparkSession.
     */
   private def bandedCandidates(sig: DataFrame, sigCols: Seq[Column],
                                bandKeys: Seq[Column], maxBucket: Int): DataFrame = {
@@ -151,7 +67,6 @@ object MinHashLsh {
     // sides, both cross-expansion sides, both intra sides) — without a
     // barrier each branch re-runs the signature aggregate above the
     // reused exchange; materialize it once (k longs per doc, compact).
-    // Same retention caveat as the candidate checkpoint below.
     val members = sig.withColumn("__gid",
       min(col("__id")).over(Window.partitionBy(sigCols: _*)))
       .localCheckpoint(false)
@@ -194,10 +109,11 @@ object MinHashLsh {
     * depends only on content, so the output is identical to scoring
     * every member pair directly. A pair whose either side has an empty
     * shingle set drops in both forms (inner join against the set
-    * frame). Shared by the xxhash64 and portable paths.
+    * frame). Shingles are word n-grams, the same ones
+    * [[portableSignatures]] hashes.
     */
   private def exactRerank(cand: DataFrame, df: DataFrame, id: Column, text: Column,
-                          shingler: (Column, Int) => Column, n: Int): DataFrame = {
+                          n: Int): DataFrame = {
     val candIds = cand.select(col("id1").as("__id"))
       .unionAll(cand.select(col("id2").as("__id"))).distinct()
     // spread before the semi-join: when the candidate list broadcasts,
@@ -211,7 +127,7 @@ object MinHashLsh {
       .withColumn("__ck", sha2(col("__text").cast("binary"), 256))
     val idKey = keyed.select(col("__id"), col("__ck"))
     val sets = keyed.dropDuplicates("__ck")
-      .select(col("__ck"), explode(shingler(col("__text"), n)).as("__sh"))
+      .select(col("__ck"), explode(ShingleJaccard.wordShingles(col("__text"), n)).as("__sh"))
       .groupBy("__ck").agg(collect_set(col("__sh")).as("__shs"))
     val candK = cand
       .join(idKey.select(col("__id").as("id1"), col("__ck").as("__ck1")), "id1")
@@ -227,12 +143,6 @@ object MinHashLsh {
       .select(col("id1"), col("id2"), col("jaccard"))
   }
 
-  // ---- engine-portable variant (oracle-checkable end to end) ---------
-
-  /** 0-15 value of one lowercase-hex char (portable: CASE + ascii). */
-  private def nib(c: Column): Column =
-    when(ascii(c) <= 57, ascii(c) - 48).otherwise(ascii(c) - 87)
-
   /** 32-bit base hash of a string: first 8 hex chars of md5, Horner-
     * folded — BIGINT arithmetic only, identical in any engine with
     * md5/ascii/substring (no engine-private hash constants). The SQL
@@ -246,17 +156,6 @@ object MinHashLsh {
     */
   def portableHash32(s: Column): Column =
     graft.functions.PortableHash32(s.cast("binary"))
-
-  /** The pre-r18 builtin-only form of [[portableHash32]] — kept as the
-    * reference the equality spec checks the codegen expression against.
-    */
-  private[graft] def portableHash32Reference(s: Column): Column = {
-    val h = md5(s.cast("binary"))
-    // long accumulator from the start — an int Horner chain overflows
-    // 32-bit arithmetic (ANSI error) before any widening cast
-    (1 to 8).map(j => nib(substring(h, j, 1)))
-      .foldLeft(lit(0L))((acc, d) => acc * 16 + d)
-  }
 
   /** Slot constants: odd multiplier < 2^31 and addend < 2^32, from
     * splitmix64 of the slot index — (h*a+b) stays under 2^63, so the
@@ -324,11 +223,11 @@ object MinHashLsh {
   /** MinHash+LSH near-dup pairs where EVERY step — base hash, slot
     * permutations, band keys, candidate join, exact-Jaccard rerank —
     * is expressible in portable ANSI-ish SQL, so the whole pipeline
-    * can be oracle-checked bit-for-bit (gate query q45). The
-    * xxhash64-based `nearDupPairs` remains the performance path (one
-    * 64-bit hash vs an md5 per shingle); this variant trades hash
-    * throughput for cross-engine reproducibility, e.g. when another
-    * system must agree on WHICH documents were dropped.
+    * can be oracle-checked bit-for-bit (gate queries q28 and q45), and
+    * another system can agree on WHICH documents were dropped. No
+    * engine-private fast path sits beside it: with one digest per
+    * shingle ([[graft.functions.PortableHash32]]), a 64-bit Spark-hash
+    * variant gave q28 the same rows no faster (CHANGES.md).
     *
     * Mechanics: distinct word n-gram shingles → 32-bit portable hash →
     * k slot minima of (h*a_i + b_i) mod 2^32 → bands of r = k/b minima
@@ -346,7 +245,7 @@ object MinHashLsh {
     val cand = bandedCandidates(sig, sigCols, bandCols, maxBucket)
       .localCheckpoint(false)
 
-    exactRerank(cand, df, id, text, ShingleJaccard.wordShingles, n)
+    exactRerank(cand, df, id, text, n)
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), col("jaccard"))
   }

@@ -3,18 +3,29 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** 64-bit SimHash near-duplicate fingerprinting.
+/** SimHash near-duplicate fingerprinting, at two widths.
   *
-  * Each token hashes to 64 bits; bit i of the document fingerprint is
-  * the sign of Σ_tokens (±1 for bit i of the token hash). Near-dups have
-  * small Hamming distance between fingerprints.
+  * Each token hashes to w bits; bit i of the document fingerprint is
+  * set iff Σ_tokens (±1 for bit i of the token hash) >= 0. Near-dups
+  * have small Hamming distance between fingerprints.
   *
-  * Spark shape: explode tokens → ONE hash-aggregate with 64 codegen'd
-  * conditional sums → fingerprint assembly. Candidate pairing at scale
-  * uses the pigeonhole trick: split 64 bits into `bands` chunks — any
-  * pair within Hamming distance `bands - 1` shares ≥1 exact chunk, so a
-  * chunk-equality bucket join finds all such pairs with a linear
-  * shuffle; `bit_count(xor)` then gives the exact distance.
+  * Spark shape: explode tokens → ONE aggregate
+  * ([[graft.functions.SimHashAgg]]) per document. Both widths use it:
+  * a token hash in [0, 2^32) votes −1 on every high bit, so those bits
+  * stay clear and the 64-bit fold IS the 32-bit fingerprint. Candidate
+  * pairing at scale uses the pigeonhole trick: split the w bits into
+  * `bands` chunks — any pair within Hamming distance `bands - 1`
+  * shares ≥1 exact chunk, so a chunk-equality bucket join finds all
+  * such pairs with a linear shuffle; `bit_count(xor)` then gives the
+  * exact distance.
+  *
+  * Why two widths: fingerprint width is behaviour, not speed. At the
+  * same `maxDist = 3, bands = 4`, q29's input (the full sf0.1
+  * `documents` plus 20 planted near-dups) gives 459 pairs at 64 bits
+  * (xxhash64 tokens, [[nearDupPairs]]) and 96,933 at 32 bits (md5
+  * tokens, [[nearDupPairsPortable]]): three differing bits out of 32
+  * is a far looser threshold than three out of 64. The 32-bit form
+  * exists because its every step has a portable SQL mirror (q46).
   */
 object SimHash {
 
@@ -30,13 +41,13 @@ object SimHash {
       .select(col("__id").as("id"), col("simhash"))
 
   /** Pigeonhole band join + exact Hamming filter over a fingerprint
-    * frame (id, <fpCol>). `chunk(col, b)` extracts band b's chunk from
-    * the named fingerprint column (applied to the fp frame AND to both
-    * pair sides for the first-shared-band dedup) — the only piece that
-    * differs between the 64-bit shift form and the 32-bit portable div
-    * form. Complete for
+    * frame (id, <fpCol>). Band b's chunk is bits [b·width, (b+1)·width)
+    * of the fingerprint, `(f >>> b·width) & (2^width − 1)` (applied to
+    * the fp frame AND to both pair sides for the first-shared-band
+    * dedup); for fingerprints in [0, 2^32) that equals the oracle's
+    * `(f // 2^(b·width)) % 2^width`. Complete for
     * maxDist < bands (recall-complete; `maxBucket` can trade that off,
-    * below). Shared by both variants, so fixes (like the band-column
+    * below). Shared by both widths, so fixes (like the band-column
     * disambiguation) live in one place.
     *
     * Hot-band guard: the band join runs over DISTINCT fingerprints
@@ -58,17 +69,20 @@ object SimHash {
     * is hot.
     */
   private def bandedPairs(fps: DataFrame, fpCol: String, bands: Int,
-                          chunk: (String, Int) => Column, maxDist: Int,
+                          width: Int, maxDist: Int,
                           maxBucket: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val mask = if (width == 64) -1L else (1L << width) - 1
+    def chunk(c: String, b: Int): Column =
+      shiftrightunsigned(col(c), b * width).bitwiseAND(mask)
     val chunks = array((0 until bands).map { b =>
       struct(lit(b).as("band"), chunk(fpCol, b).as("chunk"))
     }: _*)
     // the fingerprint frame feeds six plan branches (distinct→band
     // sides, both expansion sides, both intra sides); materialize it
     // once — 16 bytes per doc — so the fingerprint aggregation is not
-    // re-run per branch. Checkpoint-block retention is documented in
-    // MinHashLsh.nearDupPairs; same tradeoff here.
+    // re-run per branch. Checkpoint-block retention is documented on
+    // MinHashLsh.bandedCandidates; same tradeoff here.
     val fpsM = fps.localCheckpoint(false)
     val banded = fpsM.select(col(fpCol)).distinct().withColumn("__bc", explode(chunks))
     val guarded =
@@ -130,57 +144,39 @@ object SimHash {
                    maxBucket: Int = Int.MaxValue): DataFrame = {
     require(bands > maxDist, "pigeonhole completeness needs bands > maxDist")
     require(64 % bands == 0, "bands must divide 64")
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1
     // the fingerprint barrier lives inside bandedPairs (the collapse
     // introduced six consumers of this frame; ReuseExchange alone only
     // dedupes up to the exchange, re-running the final aggregate per
     // consumer)
     val fps = fingerprints(df, id, text)
-    bandedPairs(fps, "simhash", bands,
-      (c, b) => shiftrightunsigned(col(c), b * width).bitwiseAND(mask),
-      maxDist, maxBucket)
+    bandedPairs(fps, "simhash", bands, 64 / bands, maxDist, maxBucket)
   }
 
   // ---- engine-portable variant (oracle-checkable end to end) ---------
 
   /** 32-bit SimHash from the md5-derived portable token hash — every
     * step (token hash, per-bit votes, fingerprint assembly, chunk
-    * bands, Hamming distance) expressible in portable SQL. The
-    * explode-over-bits shape (tokens × 32 vote rows → two keyed aggs)
-    * trades the SimHashAgg tight loop for exact cross-engine mirroring;
-    * use `fingerprints` when only Spark needs the answer.
+    * bands, Hamming distance) expressible in portable SQL (the q46
+    * oracle mirrors the per-bit votes as a tokens × 32 explode and two
+    * keyed aggregations). Spark folds the same votes in SimHashAgg:
+    * the token hash is < 2^32, so only the low 32 bits can be set.
     */
-  def fingerprintsPortable(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val toks = df.select(id.as("__id"), explode(TextAnalysis.tokens(text)).as("__t"))
-    val hashed = toks.select(col("__id"),
-      MinHashLsh.portableHash32(col("__t")).as("__h"))
-    val bits = array((0 until 32).map(b =>
-      struct(lit(b).as("bit"), lit(1L << b).as("bv"))): _*)
-    hashed.select(col("__id"), col("__h"), explode(bits).as("__b"))
-      .select(col("__id"), col("__b.bit").as("__bit"), col("__b.bv").as("__bv"),
-        expr("CASE WHEN (__h div __b.bv) % 2 = 1 THEN 1 ELSE -1 END").as("__vote"))
-      .groupBy("__id", "__bit", "__bv")
-      .agg(sum(col("__vote")).as("__v"))
+  def fingerprintsPortable(df: DataFrame, id: Column, text: Column): DataFrame =
+    df.select(id.as("__id"), explode(TextAnalysis.tokens(text)).as("__t"))
       .groupBy("__id")
-      .agg(sum(when(col("__v") >= 0, col("__bv")).otherwise(lit(0L))).as("simhash32"))
+      .agg(graft.functions.SimHashAgg.simhash(
+        MinHashLsh.portableHash32(col("__t"))).as("simhash32"))
       .select(col("__id").as("id"), col("simhash32"))
-  }
 
   /** Pigeonhole band join + exact Hamming over the portable 32-bit
-    * fingerprints (complete for maxDist < bands, as above). The chunk
-    * extraction uses integer division rather than shifts because the
-    * oracle SQL mirrors it with `//`.
+    * fingerprints (complete for maxDist < bands, as above).
     */
   def nearDupPairsPortable(df: DataFrame, id: Column, text: Column,
                            maxDist: Int = 3, bands: Int = 4,
                            maxBucket: Int = Int.MaxValue): DataFrame = {
     require(bands > maxDist, "pigeonhole completeness needs bands > maxDist")
     require(32 % bands == 0, "bands must divide 32")
-    val width = 32 / bands
     val fps = fingerprintsPortable(df, id, text)
-    bandedPairs(fps, "simhash32", bands,
-      (c, b) => expr(s"($c div ${1L << (b * width)}) % ${1L << width}"),
-      maxDist, maxBucket)
+    bandedPairs(fps, "simhash32", bands, 32 / bands, maxDist, maxBucket)
   }
 }

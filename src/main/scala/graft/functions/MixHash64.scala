@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -34,9 +33,6 @@ case class MixHash64(child: Expression, a: Long, b: Long) extends UnaryExpressio
 }
 
 object MixHash64 {
-  def apply(h: Column, a: Long, b: Long): Column =
-    GraftBridge.column(MixHash64(GraftBridge.expression(h), a, b))
-
   /** splitmix64 finalizer — source of deterministic per-slot constants. */
   def splitmix64(x0: Long): Long = {
     var z = x0 + 0x9E3779B97F4A7C15L
@@ -50,7 +46,4 @@ object MixHash64 {
 
   /** Addend for permutation slot i. */
   def addConst(i: Int): Long = splitmix64(2L * i + 2)
-
-  /** Permutation i of a base-hash column. */
-  def mix(h: Column, i: Int): Column = apply(h, mulConst(i), addConst(i))
 }

@@ -16,7 +16,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * elementwise, and finishes to the packed 64-bit fingerprint. Planned
   * via ObjectHashAggregate; map-side partial aggregation still applies.
   *
-  * Input: the 64-bit token hash (e.g. xxhash64(token)).
+  * Input: the token hash — 64-bit xxhash64(token) for SimHash's 64-bit
+  * fingerprint, or the 32-bit portable md5 hash for its 32-bit one
+  * (a hash < 2^32 votes −1 on bits 32-63, so they stay clear).
   * Output: simhash long — bit i set iff Σ ±1 votes for bit i is >= 0.
   */
 case class SimHashAgg(

@@ -15,7 +15,7 @@ class NearDupSpec extends SparkTestBase {
     (5L, "zzz qqq www unrelated noise tokens xyzzy plugh")).toDF("id", "text")
 
   test("MinHashLsh finds planted near-dup pairs and only them") {
-    val pairs = MinHashLsh.nearDupPairs(corpus, $"id", $"text",
+    val pairs = MinHashLsh.nearDupPairsPortable(corpus, $"id", $"text",
       n = 3, k = 128, bands = 32, threshold = 0.6)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L), (3L, 4L)))
@@ -34,13 +34,14 @@ class NearDupSpec extends SparkTestBase {
   }
 
   test("MinHashLsh signature estimate approximates exact Jaccard") {
-    val est = MinHashLsh.nearDupPairs(corpus, $"id", $"text",
-      n = 3, k = 128, bands = 32, threshold = 0.5, exact = false)
+    val sigs = MinHashLsh.portableSignatures(corpus, $"id", $"text", n = 3, k = 128)
+    val est = MinHashLsh.selfNearDupEstimate(sigs, k = 128, bands = 32, threshold = 0.5)
       .filter($"id1" === 1L && $"id2" === 2L)
-      .select("jaccard").as[Double].head()
-    val exact = ShingleJaccard.similarPairs(corpus, $"id", $"text", 3, 0.0)
-      .filter($"id1" === 1L && $"id2" === 2L)
-      .select("jaccard").as[Double].head()
+      .select("est_jaccard").as[Double].head()
+    // exact Jaccard of the same word 3-shingle sets the signatures hash
+    val sets = corpus.select($"id", ShingleJaccard.wordShingles($"text", 3))
+      .as[(Long, Seq[String])].collect().toMap.map { case (i, sh) => i -> sh.toSet }
+    val exact = (sets(1L) & sets(2L)).size.toDouble / (sets(1L) | sets(2L)).size
     assert(math.abs(est - exact) < 0.15, s"est=$est exact=$exact")
   }
 
@@ -70,6 +71,43 @@ class NearDupSpec extends SparkTestBase {
     val banded = SimHash.nearDupPairsPortable(corpus, $"id", $"text", maxDist = 3, bands = 4)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(banded == brute)
+  }
+
+  /** The per-bit vote form of the 32-bit portable SimHash, as the q46
+    * oracle writes it: tokens × 32 vote rows, a vote sum per (doc,
+    * bit), bit set iff its sum >= 0. Reference for fingerprintsPortable.
+    */
+  private def portableVoteFingerprints(df: org.apache.spark.sql.DataFrame) = {
+    val hashed = df.select($"id",
+      explode(TextAnalysis.tokens($"text")).as("t"))
+      .select($"id", MinHashLsh.portableHash32($"t").as("h"))
+    val bits = array((0 until 32).map(b =>
+      struct(lit(b).as("bit"), lit(1L << b).as("bv"))): _*)
+    hashed.select($"id", $"h", explode(bits).as("b"))
+      .select($"id", $"b.bv".as("bv"),
+        expr("CASE WHEN (h div b.bv) % 2 = 1 THEN 1 ELSE -1 END").as("vote"))
+      .groupBy($"id", $"bv").agg(sum($"vote").as("v"))
+      .groupBy($"id")
+      .agg(sum(when($"v" >= 0, $"bv").otherwise(lit(0L))).as("simhash32"))
+  }
+
+  test("SimHash portable fingerprints equal the per-bit vote form, ties included") {
+    val rnd = new scala.util.Random(20261018L)
+    val vocab = (0 until 40).map(i => s"w${rnd.nextInt(1000)}x$i")
+    // short docs (1-6 tokens) leave many per-bit vote sums at exactly
+    // 0, where the >= 0 rule decides the bit
+    val randomDocs = (0 until 300).map { i =>
+      (1000L + i, Seq.fill(1 + rnd.nextInt(if (i % 2 == 0) 6 else 30))(
+        vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    }.toDF("id", "text")
+    val docs = dupHeavy.unionByName(randomDocs)
+    val got = SimHash.fingerprintsPortable(docs, $"id", $"text")
+      .as[(Long, Long)].collect().toMap
+    val want = portableVoteFingerprints(docs).as[(Long, Long)].collect().toMap
+    assert(got.size == 343 && got.keySet == want.keySet)
+    val wrong = got.filter { case (i, f) => want(i) != f }
+    val nWrong = wrong.size
+    assert(nWrong == 0, s"first mismatches (id -> fp): ${wrong.take(5)}")
   }
 
   test("SimHash pigeonhole banding is complete up to maxDist") {
@@ -180,9 +218,8 @@ class NearDupSpec extends SparkTestBase {
 
   test("MinHash collapse: exact-dup group pairs all survive with jaccard 1.0") {
     val docs = dupHeavy
-    val pairs = MinHashLsh.nearDupPairs(docs, $"id", $"text",
-      n = 3, k = 64, bands = 16, threshold = 0.6,
-      shingler = ShingleJaccard.wordShingles)
+    val pairs = MinHashLsh.nearDupPairsPortable(docs, $"id", $"text",
+      n = 3, k = 64, bands = 16, threshold = 0.6)
       .as[(Long, Long, Double)].collect()
     val intra = pairs.filter { case (a, b, _) => a >= 100L && b >= 100L }
     assert(intra.length == 40 * 39 / 2 && intra.forall(_._3 == 1.0))
@@ -203,9 +240,8 @@ class NearDupSpec extends SparkTestBase {
     // the (1,2) near-dup needs a band bucket of 2 distinct fps → capped away
     assert(!capped.exists { case (a, b, _) => a == 1L && b == 2L })
 
-    val cappedMh = MinHashLsh.nearDupPairs(docs, $"id", $"text",
-      n = 3, k = 64, bands = 16, threshold = 0.6,
-      shingler = ShingleJaccard.wordShingles, maxBucket = 1)
+    val cappedMh = MinHashLsh.nearDupPairsPortable(docs, $"id", $"text",
+      n = 3, k = 64, bands = 16, threshold = 0.6, maxBucket = 1)
       .as[(Long, Long, Double)].collect()
     assert(cappedMh.count { case (a, b, _) => a >= 100L && b >= 100L } == 40 * 39 / 2)
     assert(!cappedMh.exists { case (a, b, _) => a == 1L && b == 2L })

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.ext.MinHashLsh
@@ -14,6 +15,22 @@ class PortableHash32Spec extends SparkTestBase {
 
   import spark.implicits._
 
+  /** 0-15 value of one lowercase-hex char (portable: CASE + ascii). */
+  private def nib(c: Column): Column =
+    when(ascii(c) <= 57, ascii(c) - 48).otherwise(ascii(c) - 87)
+
+  /** The pre-r18 builtin-only form of MinHashLsh.portableHash32: the
+    * first 8 hex chars of md5, Horner-folded, as the oracle SQL writes
+    * it (ExtQueries.hornerSql).
+    */
+  private def portableHash32Reference(s: Column): Column = {
+    val h = md5(s.cast("binary"))
+    // long accumulator from the start — an int Horner chain overflows
+    // 32-bit arithmetic (ANSI error) before any widening cast
+    (1 to 8).map(j => nib(substring(h, j, 1)))
+      .foldLeft(lit(0L))((acc, d) => acc * 16 + d)
+  }
+
   test("equals the md5-hex Horner reference on tricky strings") {
     val rows = Seq(
       "", "a", "hello world", "ffffffff", "\u0000", "café",
@@ -24,7 +41,7 @@ class PortableHash32Spec extends SparkTestBase {
     val df = rows.toDF("s").repartition(4)
     val bad = df.select(
         MinHashLsh.portableHash32($"s").as("fast"),
-        MinHashLsh.portableHash32Reference($"s").as("ref"))
+        portableHash32Reference($"s").as("ref"))
       .filter($"fast" =!= $"ref" || $"fast".isNull =!= $"ref".isNull)
       .count()
     assert(bad == 0L)

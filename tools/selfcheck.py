@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
 """Dev-only pre-flight for the driver's DuckDB correctness gate.
 
-Usage: python3 tools/selfcheck.py <sfDir> <verifyOutDir>
+Usage: python3 tools/selfcheck.py <sfDir> <verifyOutDir> [query...]
 
 Mimics the driver: for each query in oracle_sql.json, run the SQL in
 DuckDB over the sfDir parquet tables, load the Spark parquet result,
-sort columns by name (and rows), and compare values exactly.
+sort columns by name (and rows), and compare values exactly. Query
+names after the two directories restrict the check to those queries,
+as they restrict graft.Verify's run.
 """
 import sys, json, glob, os
 import duckdb
@@ -26,13 +28,17 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), ignore_index=True)
     return df
 
-def main(sf_dir: str, out_dir: str) -> int:
+def main(sf_dir: str, out_dir: str, only=()) -> int:
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    for name in sorted(set(only) - set(oracle)):
+        print(f"SKIP {name}: no oracle SQL (rows-only gate)")
+    if only:
+        oracle = {k: v for k, v in oracle.items() if k in only}
     n_fail = 0
     for name, sql in sorted(oracle.items()):
         spark_files = glob.glob(f"{out_dir}/{name}/*.parquet")
@@ -80,4 +86,4 @@ def main(sf_dir: str, out_dir: str) -> int:
     return n_fail
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(sys.argv[1], sys.argv[2], set(sys.argv[3:])))
